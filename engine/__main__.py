@@ -60,26 +60,36 @@ def cmd_build(args) -> int:
 def cmd_search(args) -> int:
     from . import query as Q
     from .build import load_index
-    spark = _spark(args)
-    idx = load_index(spark, args.index_dir)
     bool_q = any(x is not None for x in
                  (args.must, args.should, args.min_should_match))
     if bool_q and args.query is not None:
         print("--must/--should/--min-should-match replace --query "
               "(the ES bool-query form)", file=sys.stderr)
         return 2
+    # flags the chosen search form would ignore fail before the session
+    # starts; the mini-language carries its own NOT/mode syntax
+    if args.query_string and (
+            args.query or bool_q or args.dis_query or args.mm_field
+            or args.collapse or args.sort_by or args.boost_field
+            or args.decay or args.boost_term or args.synonyms
+            or args.demote or args.slop or args.after or args.snippets
+            or args.exclude or args.mode.upper() != "OR" or args.asc
+            or args.tie_breaker or args.match_type != "best_fields"):
+        print("--query-string replaces --query and the shaping flags "
+              "(--exclude/--mode/--asc/--tie-breaker/--match-type "
+              "included); it composes with --k/--filter/--dv-filter/"
+              "--min-match/--max-expansions only", file=sys.stderr)
+        return 2
+    if args.mm_field and (args.boost_field or args.collapse
+                          or args.sort_by):
+        print("--mm-field does not compose with --boost-field/"
+              "--collapse/--sort-by", file=sys.stderr)
+        return 2
+    spark = _spark(args)
+    idx = load_index(spark, args.index_dir)
     if args.query_string:
         # the r5 mini-language: one string composes must/should/boost/
         # NOT/phrase/prefix/fuzzy (engine/querystring.py grammar)
-        if (args.query or bool_q or args.dis_query or args.mm_field
-                or args.collapse or args.sort_by or args.boost_field
-                or args.decay or args.boost_term or args.synonyms
-                or args.demote or args.slop or args.after
-                or args.snippets):
-            print("--query-string replaces --query and the shaping "
-                  "flags; it composes with --k/--filter/--dv-filter/"
-                  "--min-match/--max-expansions only", file=sys.stderr)
-            return 2
         from .querystring import QueryStringError, search_query_string
         try:
             top = search_query_string(idx, args.query_string, k=args.k,

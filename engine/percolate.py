@@ -188,8 +188,6 @@ def _live_postings(qindex) -> "DataFrame | None":
                   and s.status == "complete" and _success_marker(s.path)]
     if not paths:
         return None
-    if len(paths) == 1:
-        return qindex.postings()
     out = None
     for p in paths:
         d = qindex.spark.read.parquet(p)

@@ -585,159 +585,17 @@ def search_dis_max(index, queries: list, k: int = 10,
       rule). Routing is exhaustive-only: block-max bounds are per-term
       sums, not per-subquery maxima.
 
-    Plan: ONE job — the union of all subqueries' terms rides one
-    pruned postings scan; the shard kernel decodes each (term, shard)
-    payload ONCE, scatter-adds the shared tf-factor into every
-    subquery's accumulator scaled by that subquery's qtf, combines the
-    <= N width-bounded accumulators, and emits <= k rows; global
-    TakeOrderedAndProject."""
-    _warn_if_stale(index)
-    queries = [str(q) for q in queries]
-    if not queries:
-        raise ValueError("dis_max needs at least one subquery")
-    tie = float(tie_breaker)
-    if not (0.0 <= tie <= 1.0):
-        raise ValueError("tie_breaker must lie in [0, 1]")
-    key = ("dm", tuple(queries), k, tie, exclude, doc_filter, dv_filter)
-    return _plan_cached(index, key, lambda: _search_dis_max_impl(
-        index, queries, k, tie, exclude, doc_filter, dv_filter))
-
-
-def _search_dis_max_impl(index, queries: list, k: int, tie: float,
-                         exclude: str | None,
-                         doc_filter: str | None,
-                         dv_filter: str | None) -> DataFrame:
-    spark = index.spark
-    acfg = index.cfg.analyzer
-    sub_qtfs = [query_terms(q, acfg) for q in queries]
-    union_terms = sorted(set().union(*[set(s) for s in sub_qtfs]))
-    empty = _empty_topk(spark)
-    if not union_terms:
-        return empty
-    neg = (sorted(set(tokenize_py(exclude, acfg)) - set(union_terms))
-           if exclude else [])
-    lex = index.lookup_terms(sorted(set(union_terms) | set(neg)))
-    known = [t for t in union_terms if t in lex]
-    if not known:
-        return empty
-    neg = [t for t in neg if t in lex]
-    known_set = set(known)
-    # per-subquery known qtf maps; empty subqueries match nothing but
-    # keep their LIST SLOT (the total fold order is list order)
-    subs = [{t: float(n) for t, n in s.items() if t in known_set}
-            for s in sub_qtfs]
-    idfs = {t: float(lex[t]["idf"]) for t in known}
-    scan_terms = sorted(set(known) | set(neg))
-    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
-    post = (index.postings()
-            .filter(F.col("bucket").isin(buckets)
-                    & F.col("term").isin(scan_terms))
-            .select("term", "shard", "df", "doc_ids", "tfs", "dls"))
-    width = index.shard_width
-    cfgd = {"k1": index.cfg.bm25.k1, "b": index.cfg.bm25.b,
-            "avgdl": index.avgdl}
-    neg_set = frozenset(neg)
-    del_locs = _del_closure(index)
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-    def _kernel(post_pdf, allowed_loc=None):
-        import numpy as np
-        import pandas as pd
-        from . import codec as C
-        out_empty = pd.DataFrame({"doc_id": [], "score": []})
-        if len(post_pdf) == 0:
-            return out_empty
-        shard = int(post_pdf["shard"].iloc[0])
-        start = shard * width
-        n_sub = len(subs)
-        accs = [np.zeros(width, dtype=np.float64) for _ in range(n_sub)]
-        hitany = np.zeros(width, dtype=bool)
-        negmask = np.zeros(width, dtype=bool) if neg_set else None
-        k1, b, avgdl = cfgd["k1"], cfgd["b"], cfgd["avgdl"]
-        order = np.argsort(post_pdf["term"].to_numpy(object))
-        for i in order:
-            term = post_pdf["term"].iloc[int(i)]
-            if term in neg_set:
-                ids, _ = C.decode_postings(post_pdf["doc_ids"].iloc[int(i)],
-                                           post_pdf["tfs"].iloc[int(i)])
-                negmask[ids - start] = True
-                continue
-            ids, tfs = C.decode_postings(post_pdf["doc_ids"].iloc[int(i)],
-                                         post_pdf["tfs"].iloc[int(i)])
-            dls = C.vbyte_decode(post_pdf["dls"].iloc[int(i)]).astype(
-                np.float64)
-            loc = ids - start
-            tfs = tfs.astype(np.float64)
-            # shared decode, per-subquery contribution with EXACTLY the
-            # single-query kernel's float64 grouping — ((qtf*idf)*A)/B —
-            # so each s_i is bit-identical to search(subquery_i)'s sum
-            num = tfs * (k1 + 1.0)
-            den = tfs + k1 * (1.0 - b + b * dls / avgdl)
-            hit_marked = False
-            for si, s in enumerate(subs):
-                qtf = s.get(term)
-                if qtf is None:
-                    continue
-                # terms arrive in global ascending order, so each
-                # accumulator receives ITS terms ascending too — the
-                # frozen per-subquery summation order
-                accs[si][loc] += (qtf * idfs[term]) * num / den
-                if not hit_marked:
-                    hitany[loc] = True
-                    hit_marked = True
-        if negmask is not None:
-            hitany[negmask] = False
-        if del_locs is not None:
-            dl_ = del_locs(shard)
-            if dl_ is not None:
-                hitany[dl_] = False
-        if dv_filter is not None:
-            from .docvalues import eval_filter
-            allow = np.zeros(width, dtype=bool)
-            allow[eval_filter(dv_dir, shard, dv_gen, dv_filter)] = True
-            hitany &= allow
-        if allowed_loc is not None:
-            allow = np.zeros(width, dtype=bool)
-            allow[np.asarray(allowed_loc, dtype=np.int64)] = True
-            hitany &= allow
-        hit = np.flatnonzero(hitany)
-        if hit.size == 0:
-            return out_empty
-        # combine: total = left-fold in subquery list order; best = max;
-        # score = best + tie * (total - best) — the twin's expression
-        total = accs[0][hit].copy()
-        best = accs[0][hit].copy()
-        for si in range(1, len(accs)):
-            v = accs[si][hit]
-            total = total + v
-            np.maximum(best, v, out=best)
-        scores = best + tie * (total - best)
-        hit, scores = C.topk_tiebreak(hit, scores, k)
-        import pandas as _pd
-        return _pd.DataFrame({"doc_id": (hit + start).astype(np.int64),
-                              "score": scores})
-
-    if doc_filter is not None:
-        allowed = _allowed_shards(index, doc_filter, width)
-
-        def fnf(key, post_pdf, allowed_pdf):
-            import numpy as np
-            import pandas as pd
-            if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            shard = int(post_pdf["shard"].iloc[0])
-            loc = (allowed_pdf["doc_id"].to_numpy(np.int64)
-                   - shard * width)
-            return _kernel(post_pdf, allowed_loc=loc)
-
-        scored = (post.groupBy("shard")
-                  .cogroup(allowed.groupBy("shard"))
-                  .applyInPandas(fnf, "doc_id long, score double"))
-    else:
-        scored = (post.groupBy("shard")
-                  .applyInPandas(lambda key, pdf: _kernel(pdf),
-                                 "doc_id long, score double"))
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    Plan: a one-entry ``search_batch`` (``{"mode": "DIS_MAX"}``) cut by
+    TakeOrderedAndProject — each subquery is a boost-1.0 text-space
+    slot of the batch compound scorer, so the union of all subqueries'
+    terms rides one pruned postings scan and each (term, shard) payload
+    is decoded once."""
+    entry = {"id": "q", "mode": "DIS_MAX",
+             "queries": [str(q) for q in queries],
+             "tie_breaker": float(tie_breaker)}
+    if exclude:
+        entry["exclude"] = exclude
+    return _search_one(index, entry, k, doc_filter, dv_filter)
 
 
 def search_multi_match(index, query: str, fields=None, k: int = 10,
@@ -789,49 +647,19 @@ def search_multi_match(index, query: str, fields=None, k: int = 10,
       Routing is exhaustive-only (like dis_max: block-max bounds are
       per-term sums, not cross-field maxima).
 
-    Plan: ONE job — all fields' prefixed terms ride one pruned
-    postings scan (same segment layout, same bucket pruning); the
-    shard kernel routes each (term, shard) payload to its field's
-    width-bounded accumulator (a term key belongs to exactly one
-    field), combines, and emits <= k rows; global
-    TakeOrderedAndProject. At 100 TB this is the same single-scan
-    cost shape as dis_max — fields multiply the query's term count,
-    never the corpus reads."""
-    _warn_if_stale(index)
-    if fields is None:
-        fields = {"text": 1.0}
-        for f_ in (index.extra_fields or ()):
-            fields[f_] = 1.0
-    elif not isinstance(fields, dict):
-        fields = {str(f_): 1.0 for f_ in fields}
-    else:
-        fields = {str(f_): float(b_) for f_, b_ in fields.items()}
-    if not fields:
-        raise ValueError("multi_match needs at least one field")
-    known_fields = {"text", *(index.extra_fields or ())}
-    bad = [f_ for f_ in fields if f_ not in known_fields]
-    if bad:
-        raise ValueError(
-            f"multi_match fields {bad} not indexed (available: "
-            f"{sorted(known_fields)}; build with "
-            f"IndexConfig.extra_fields)")
-    if any(b_ <= 0 for b_ in fields.values()):
-        raise ValueError("field boosts must be > 0")
-    mt = str(match_type)
-    if mt not in ("best_fields", "most_fields", "cross_fields"):
-        raise ValueError("match_type must be "
-                         "best_fields|most_fields|cross_fields")
-    tie = float(tie_breaker)
-    if not (0.0 <= tie <= 1.0):
-        raise ValueError("tie_breaker must lie in [0, 1]")
-    if mt == "most_fields" and tie != 0.0:
-        raise ValueError("tie_breaker only applies to "
-                         "best_fields/cross_fields")
-    key = ("mm", query, tuple(fields.items()), k, mt, tie, exclude,
-           doc_filter, dv_filter)
-    return _plan_cached(index, key, lambda: _search_multi_match_impl(
-        index, query, fields, k, mt, tie, exclude, doc_filter,
-        dv_filter))
+    Plan: a one-entry ``search_batch`` (``{"mode": "MULTI_MATCH"}``,
+    all three match types) cut by TakeOrderedAndProject; the batch
+    lowering validates fields, match_type and tie_breaker. All fields'
+    prefixed terms ride one pruned postings scan, so fields multiply
+    the query's term count, never the corpus reads."""
+    entry = {"id": "q", "mode": "MULTI_MATCH", "query": query,
+             "match_type": match_type, "tie_breaker": float(tie_breaker)}
+    if fields is not None:
+        entry["fields"] = fields if isinstance(fields, dict) \
+            else list(fields)
+    if exclude:
+        entry["exclude"] = exclude
+    return _search_one(index, entry, k, doc_filter, dv_filter)
 
 
 def search_fielded(index, clauses: list, k: int = 10,
@@ -846,267 +674,29 @@ def search_fielded(index, clauses: list, k: int = 10,
     combine, per-field boost 1.0 — weights live on the clauses).
     Duplicate (field, token) clauses merge by SUMMING weights (the
     Lucene repeated-clause qtf rule). ``exclude`` stays a text-space
-    NOT. Backed by the multi_match kernel: one pruned scan, per-field
-    width-bounded accumulators, TakeOrderedAndProject. The
+    NOT (positive-wins vs the text clauses' tokens). Plan: a one-entry
+    most_fields MULTI_MATCH batch whose per-field slots are these
+    {token: weight} maps, cut by TakeOrderedAndProject. The
     query-string mini-language's ``field:term`` syntax routes here
     (engine/querystring.py)."""
-    _warn_if_stale(index)
-    norm: dict = {}
-    order: list = []
-    known_fields = {"text", *(index.extra_fields or ())}
+    fq: dict = {}
     for f_, t, w in clauses:
-        f_, t, w = str(f_), str(t), float(w)
-        if f_ not in known_fields:
-            raise ValueError(
-                f"field {f_!r} not indexed (available: "
-                f"{sorted(known_fields)}; build with "
-                f"IndexConfig.extra_fields)")
+        w = float(w)
         if w <= 0:
             raise ValueError("clause weights must be > 0")
-        toks = tokenize_py(t, index.cfg.analyzer)
+        toks = tokenize_py(str(t), index.cfg.analyzer)
         if len(toks) != 1:
             raise ValueError(f"clause token {t!r} must analyze to "
                              f"exactly one term (got {toks})")
-        if f_ not in norm:
-            norm[f_] = {}
-            order.append(f_)
-        norm[f_][toks[0]] = norm[f_].get(toks[0], 0.0) + w
-    if not norm:
+        m = fq.setdefault(str(f_), {})
+        m[toks[0]] = m.get(toks[0], 0.0) + w
+    if not fq:
         raise ValueError("search_fielded needs at least one clause")
-    fq = {f_: norm[f_] for f_ in order}
-    key = ("fq", tuple((f_, tuple(sorted(m.items())))
-                       for f_, m in fq.items()), k, exclude, doc_filter,
-           dv_filter)
-    return _plan_cached(index, key, lambda: _search_multi_match_impl(
-        index, None, {f_: 1.0 for f_ in fq}, k, "most_fields", 0.0,
-        exclude, doc_filter, dv_filter, fq=fq))
-
-
-def _search_multi_match_impl(index, query: "str | None", fields: dict,
-                             k: int, mt: str, tie: float, exclude,
-                             doc_filter, dv_filter,
-                             fq: dict | None = None) -> DataFrame:
-    spark = index.spark
-    acfg = index.cfg.analyzer
-    empty = _empty_topk(spark)
-    if fq is None:
-        qt = query_terms(query, acfg)
-        if not qt:
-            return empty
-    else:
-        # search_fielded: per-field token->qtf maps prebuilt by the
-        # caller; qt (the exclude positive-wins base) is the TEXT
-        # clauses' tokens
-        qt = dict(fq.get("text", {}))
-        if not any(fq.values()):
-            return empty
-    field_list = list(fields)  # dict order == frozen fold order
-    favg = {"text": float(index.avgdl)}
-    for f_ in field_list:
-        if f_ != "text":
-            favg[f_] = float((index.field_avgdl or {}).get(f_, 0.0))
-
-    def tkey(f_, t):
-        return t if f_ == "text" else f"{f_}:{t}"
-
-    # exclude applies in the text space (positive-wins vs text terms)
-    neg = (sorted(set(tokenize_py(exclude, acfg)) - set(qt))
-           if exclude else [])
-    if fq is None:
-        all_keys = sorted({tkey(f_, t) for f_ in field_list for t in qt
-                           if favg[f_] > 0.0} | set(neg))
-    else:
-        all_keys = sorted({tkey(f_, t) for f_ in field_list
-                           for t in fq.get(f_, {})
-                           if favg[f_] > 0.0} | set(neg))
-    if not all_keys:
-        return empty
-    lex = index.lookup_terms(all_keys)
-    neg = [t for t in neg if t in lex]
-    # per-field known (prefixed-term -> qtf) maps; empty fields keep
-    # their LIST SLOT (the total fold order is fields order)
-    subs = []
-    for f_ in field_list:
-        src = qt if fq is None else fq.get(f_, {})
-        m = {tkey(f_, t): float(n) for t, n in src.items()
-             if favg[f_] > 0.0 and tkey(f_, t) in lex}
-        subs.append((f_, m))
-    if not any(m for _, m in subs):
-        return empty
-    idfs = {t: float(lex[t]["idf"]) for t in lex}
-    scan_terms = sorted({t for _, m in subs for t in m} | set(neg))
-    buckets = sorted({lex[t]["bucket"] for t in scan_terms})
-    post = (index.postings()
-            .filter(F.col("bucket").isin(buckets)
-                    & F.col("term").isin(scan_terms))
-            .select("term", "shard", "df", "doc_ids", "tfs", "dls"))
-    width = index.shard_width
-    k1_, b_ = index.cfg.bm25.k1, index.cfg.bm25.b
-    boosts = [float(fields[f_]) for f_ in field_list]
-    avgdls = [favg[f_] for f_ in field_list]
-    # term key -> (field slot, qtf); a key belongs to exactly one slot
-    term_slot = {}
-    for si, (f_, m) in enumerate(subs):
-        for t, n in m.items():
-            term_slot[t] = (si, n)
-    # cross_fields: token-major grouping — per TOKEN, the field
-    # variants whose per-term contributions combine max+tie*(sum-max)
-    token_groups = []
-    if mt == "cross_fields":
-        for t in sorted(qt):  # ascending tokens == the frozen fold
-            variants = [(si, tkey(f_, t), float(qt[t]))
-                        for si, (f_, m) in enumerate(subs)
-                        if tkey(f_, t) in m]
-            if variants:
-                token_groups.append((t, variants))
-    neg_set = frozenset(neg)
-    del_locs = _del_closure(index)
-    dv_dir, dv_gen = index.index_dir, int(index.n_docs)
-
-    def _kernel(post_pdf, allowed_loc=None):
-        import numpy as np
-        import pandas as pd
-        from . import codec as C
-        out_empty = pd.DataFrame({"doc_id": [], "score": []})
-        if len(post_pdf) == 0:
-            return out_empty
-        shard = int(post_pdf["shard"].iloc[0])
-        start = shard * width
-        n_sub = len(subs)
-        accs = [np.zeros(width, dtype=np.float64) for _ in range(n_sub)]
-        hitany = np.zeros(width, dtype=bool)
-        negmask = np.zeros(width, dtype=bool) if neg_set else None
-        cross_total = None
-        if mt == "cross_fields":
-            # decode once into a key map, then walk tokens ascending:
-            # v_t = max_f(c) + tie * (sum_f(c) - max_f(c)), c =
-            # boost_f * the frozen per-term contribution with the
-            # FIELD's avgdl; total[doc] += v_t per token — the twin's
-            # exact expression
-            dec = {}
-            for i in range(len(post_pdf)):
-                term = post_pdf["term"].iloc[i]
-                ids, tfs = C.decode_postings(
-                    post_pdf["doc_ids"].iloc[i],
-                    post_pdf["tfs"].iloc[i])
-                if term in neg_set:
-                    negmask[ids - start] = True
-                    continue
-                dls = C.vbyte_decode(
-                    post_pdf["dls"].iloc[i]).astype(np.float64)
-                dec[term] = (ids - start, tfs.astype(np.float64), dls)
-            cross_total = np.zeros(width, dtype=np.float64)
-            tmax = np.zeros(width, dtype=np.float64)
-            tsum = np.zeros(width, dtype=np.float64)
-            for _tok, variants in token_groups:
-                locs_t = []
-                for si, key, qtf in variants:
-                    d = dec.get(key)
-                    if d is None:
-                        continue
-                    loc, tfs, dls = d
-                    num = tfs * (k1_ + 1.0)
-                    den = tfs + k1_ * (1.0 - b_ + b_ * dls / avgdls[si])
-                    c = boosts[si] * ((qtf * idfs[key]) * num / den)
-                    tmax[loc] = np.maximum(tmax[loc], c)
-                    tsum[loc] += c
-                    hitany[loc] = True
-                    locs_t.append(loc)
-                if not locs_t:
-                    continue
-                tk = np.unique(np.concatenate(locs_t))
-                cross_total[tk] += (tmax[tk]
-                                    + tie * (tsum[tk] - tmax[tk]))
-                tmax[tk] = 0.0
-                tsum[tk] = 0.0
-        else:
-            order = np.argsort(post_pdf["term"].to_numpy(object))
-            for i in order:
-                term = post_pdf["term"].iloc[int(i)]
-                if term in neg_set:
-                    ids, _ = C.decode_postings(
-                        post_pdf["doc_ids"].iloc[int(i)],
-                        post_pdf["tfs"].iloc[int(i)])
-                    negmask[ids - start] = True
-                    continue
-                slot = term_slot.get(term)
-                if slot is None:
-                    continue
-                si, qtf = slot
-                ids, tfs = C.decode_postings(
-                    post_pdf["doc_ids"].iloc[int(i)],
-                    post_pdf["tfs"].iloc[int(i)])
-                dls = C.vbyte_decode(
-                    post_pdf["dls"].iloc[int(i)]).astype(np.float64)
-                loc = ids - start
-                tfs = tfs.astype(np.float64)
-                # EXACTLY the single-query kernel's float64 grouping —
-                # ((qtf*idf)*A)/B — with THIS FIELD's avgdl in the
-                # length norm (the dls stream already carries the
-                # field's dl); terms arrive in global ascending order,
-                # so each field's accumulator receives ITS terms
-                # ascending too
-                num = tfs * (k1_ + 1.0)
-                den = tfs + k1_ * (1.0 - b_ + b_ * dls / avgdls[si])
-                accs[si][loc] += (qtf * idfs[term]) * num / den
-                hitany[loc] = True
-        if negmask is not None:
-            hitany[negmask] = False
-        if del_locs is not None:
-            dl_ = del_locs(shard)
-            if dl_ is not None:
-                hitany[dl_] = False
-        if dv_filter is not None:
-            from .docvalues import eval_filter
-            allow = np.zeros(width, dtype=bool)
-            allow[eval_filter(dv_dir, shard, dv_gen, dv_filter)] = True
-            hitany &= allow
-        if allowed_loc is not None:
-            allow = np.zeros(width, dtype=bool)
-            allow[np.asarray(allowed_loc, dtype=np.int64)] = True
-            hitany &= allow
-        hit = np.flatnonzero(hitany)
-        if hit.size == 0:
-            return out_empty
-        if mt == "cross_fields":
-            scores = cross_total[hit]
-        else:
-            # combine: s_f = boost_f * sum_f; total = left-fold in
-            # fields order; best_fields = best + tie * (total - best);
-            # most_fields = total — the twin's expression verbatim
-            total = boosts[0] * accs[0][hit]
-            best = total.copy()
-            for si in range(1, n_sub):
-                v = boosts[si] * accs[si][hit]
-                total = total + v
-                np.maximum(best, v, out=best)
-            scores = total if mt == "most_fields" \
-                else best + tie * (total - best)
-        hit, scores = C.topk_tiebreak(hit, scores, k)
-        return pd.DataFrame({"doc_id": (hit + start).astype(np.int64),
-                             "score": scores})
-
-    if doc_filter is not None:
-        allowed = _allowed_shards(index, doc_filter, width)
-
-        def fnf(key, post_pdf, allowed_pdf):
-            import numpy as np
-            import pandas as pd
-            if len(post_pdf) == 0 or len(allowed_pdf) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []})
-            shard = int(post_pdf["shard"].iloc[0])
-            loc = (allowed_pdf["doc_id"].to_numpy(np.int64)
-                   - shard * width)
-            return _kernel(post_pdf, allowed_loc=loc)
-
-        scored = (post.groupBy("shard")
-                  .cogroup(allowed.groupBy("shard"))
-                  .applyInPandas(fnf, "doc_id long, score double"))
-    else:
-        scored = (post.groupBy("shard")
-                  .applyInPandas(lambda key, pdf: _kernel(pdf),
-                                 "doc_id long, score double"))
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    entry = {"id": "q", "mode": "MULTI_MATCH", "match_type": "most_fields"}
+    if exclude:
+        entry["exclude"] = exclude
+    return _search_one(index, entry, k, doc_filter, dv_filter,
+                       fielded={"q": fq})
 
 
 def search_boosting(index, positive: str, negative: str,
@@ -2234,7 +1824,6 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                        musts: dict | None = None,
                        minsh: dict | None = None,
                        demotes: dict | None = None,
-                       dismaxes: dict | None = None,
                        multis: dict | None = None,
                        dv_preds: dict | None = None,
                        dv_ctx: tuple | None = None,
@@ -2355,6 +1944,7 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
     # counter for the must clause; allocated once per shard task and
     # reset at touched positions like acc/cnt
     cntm = np.zeros(width, dtype=np.int32) if musts else None
+    tmax = tsum = None   # cross_fields per-token scratch, on first use
     outs = []
     if use_wand:  # "auto" or True
         from .wand import score_shard_wand
@@ -2398,48 +1988,84 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
             continue
         q_mm = msm.get(qid, 1) if msm else 1
         q_dem = demotes.get(qid) if demotes else None
-        q_dm = dismaxes.get(qid) if dismaxes else None
         q_mul = multis.get(qid) if multis else None
         q_dvp = dv_preds.get(qid) if dv_preds else None
         q_bst = boosts.get(qid) if boosts else None
         if q_mul is not None:
-            # MULTI_MATCH entry (same frozen combine as
-            # search_multi_match: per-field boost * frozen sum with the
-            # FIELD's avgdl in the length norm, total folded in fields
-            # order, best_fields = best + tie * (total - best),
-            # most_fields = total); per-(term, qtf, avgdl) contribution
-            # vectors come from the shared cache
+            # MULTI_MATCH entry — also the lowering of DIS_MAX (one slot
+            # per subquery at boost 1.0 and the index avgdl) and of
+            # search_fielded (per-field clause maps). A slot is (avgdl,
+            # boost, key prefix, {token: qtf}); its term keys are
+            # prefix + token, so each slot's keys sort like its tokens.
+            # Contribution vectors come from the shared cache, keyed on
+            # the slot's avgdl (per-field length normalization).
             slots_, tie_, mt_ = q_mul
-            per_sub, all_t = [], []
-            for avg_f, bf_, tmap in slots_:
-                terms_i = [t for t in sorted(tmap) if t in decoded]
-                if not terms_i:
-                    per_sub.append(None)
+            if mt_ == "cross_fields":
+                # token-major: per TOKEN ascending, v_t = max_f(c) +
+                # tie * (sum_f(c) - max_f(c)) with c = boost_f * the
+                # frozen contribution; score = sum of v_t
+                if tmax is None:
+                    tmax = np.zeros(width, dtype=np.float64)
+                    tsum = np.zeros(width, dtype=np.float64)
+                all_t = []
+                for t in sorted({t for *_, tm in slots_ for t in tm}):
+                    locs_t = []
+                    for avg_f, bf_, pre, tm in slots_:
+                        key = pre + t
+                        if t not in tm or key not in decoded:
+                            continue
+                        loc = decoded[key][0]
+                        c = bf_ * _contrib(key, float(tm[t]), avg_f)
+                        tmax[loc] = np.maximum(tmax[loc], c)
+                        tsum[loc] += c
+                        locs_t.append(loc)
+                    if not locs_t:
+                        continue
+                    tk = np.unique(np.concatenate(locs_t))
+                    acc[tk] += tmax[tk] + tie_ * (tsum[tk] - tmax[tk])
+                    tmax[tk] = 0.0
+                    tsum[tk] = 0.0
+                    all_t.append(tk)
+                if not all_t:
                     continue
-                locs_i = []
-                for t in terms_i:
-                    loc = decoded[t][0]
-                    acc[loc] += _contrib(t, float(tmap[t]), avg_f)
-                    locs_i.append(loc)
-                t_i = np.unique(np.concatenate(locs_i))
-                per_sub.append((t_i, bf_ * acc[t_i]))
-                acc[t_i] = 0.0
-                all_t.append(t_i)
-            if not all_t:
-                continue
-            union = np.unique(np.concatenate(all_t))
-            total = np.zeros(union.size, dtype=np.float64)
-            best = np.zeros(union.size, dtype=np.float64)
-            for ps in per_sub:
-                v = np.zeros(union.size, dtype=np.float64)
-                if ps is not None:
-                    t_i, vals = ps
-                    v[np.searchsorted(union, t_i)] = vals
-                total = total + v
-                np.maximum(best, v, out=best)
-            sc = total if mt_ == "most_fields" \
-                else best + tie_ * (total - best)
-            hit = union
+                hit = np.unique(np.concatenate(all_t))
+                sc = acc[hit].copy()
+                acc[hit] = 0.0
+            else:
+                # per-slot frozen sum (tokens ascending), s_f = boost_f *
+                # sum; total folded in slot order over 0.0-defaulted
+                # vectors; best_fields = best + tie * (total - best),
+                # most_fields = total
+                per_sub, all_t = [], []
+                for avg_f, bf_, pre, tm in slots_:
+                    locs_i = []
+                    for t in sorted(tm):
+                        key = pre + t
+                        if key in decoded:
+                            loc = decoded[key][0]
+                            acc[loc] += _contrib(key, float(tm[t]), avg_f)
+                            locs_i.append(loc)
+                    if not locs_i:
+                        per_sub.append(None)
+                        continue
+                    t_i = np.unique(np.concatenate(locs_i))
+                    per_sub.append((t_i, bf_ * acc[t_i]))
+                    acc[t_i] = 0.0
+                    all_t.append(t_i)
+                if not all_t:
+                    continue
+                hit = np.unique(np.concatenate(all_t))
+                total = np.zeros(hit.size, dtype=np.float64)
+                best = np.zeros(hit.size, dtype=np.float64)
+                for ps in per_sub:
+                    v = np.zeros(hit.size, dtype=np.float64)
+                    if ps is not None:
+                        t_i, vals = ps
+                        v[np.searchsorted(hit, t_i)] = vals
+                    total = total + v
+                    np.maximum(best, v, out=best)
+                sc = total if mt_ == "most_fields" \
+                    else best + tie_ * (total - best)
             keep = np.ones(hit.size, dtype=bool)
             if allow is not None:
                 keep &= allow[hit]
@@ -2451,66 +2077,8 @@ def _score_shard_batch(post_pdf, per_q: dict, modes: dict, idfs: dict,
                 keep &= ~np.isin(hit, ex, assume_unique=True)
             hit, sc = hit[keep], sc[keep]
             if q_bst is not None and hit.size:
-                bv, bcomb = _boost_v(q_bst)
-                sc = sc + bv[hit] if bcomb == "sum" else sc * bv[hit]
-            if hit.size:
-                hit_k, scores = C.topk_tiebreak(hit, sc, q_k)
-                r = pd.DataFrame(
-                    {"doc_id": (hit_k + start).astype(np.int64),
-                     "score": scores})
-                r.insert(0, "qid", qid)
-                outs.append(r)
-            continue
-        if q_dm is not None:
-            # DIS_MAX entry (same frozen combine as search_dis_max:
-            # total folded in subquery LIST order over 0.0-defaulted
-            # vectors, score = best + tie * (total - best)); subquery
-            # sums reuse the shared per-(term, qtf) contribution cache
-            subs_, tie_ = q_dm
-            per_sub, all_t = [], []
-            for sq in subs_:
-                terms_i = [t for t in sorted(sq) if t in decoded]
-                if not terms_i:
-                    per_sub.append(None)
-                    continue
-                locs_i = []
-                for t in terms_i:
-                    loc = decoded[t][0]
-                    acc[loc] += _contrib(t, float(sq[t]))
-                    locs_i.append(loc)
-                t_i = np.unique(np.concatenate(locs_i))
-                per_sub.append((t_i, acc[t_i].copy()))
-                acc[t_i] = 0.0
-                all_t.append(t_i)
-            if not all_t:
-                continue
-            union = np.unique(np.concatenate(all_t))
-            total = np.zeros(union.size, dtype=np.float64)
-            best = np.zeros(union.size, dtype=np.float64)
-            for ps in per_sub:
-                v = np.zeros(union.size, dtype=np.float64)
-                if ps is not None:
-                    t_i, vals = ps
-                    v[np.searchsorted(union, t_i)] = vals
-                total = total + v
-                np.maximum(best, v, out=best)
-            sc = best + tie_ * (total - best)
-            hit = union
-            keep = np.ones(hit.size, dtype=bool)
-            if allow is not None:
-                keep &= allow[hit]
-            if q_dvp is not None:
-                keep &= _dv_mask(q_dvp)[hit]
-            if q_negs:
-                ex = np.unique(np.concatenate(
-                    [decoded[t][0] for t in q_negs]))
-                keep &= ~np.isin(hit, ex, assume_unique=True)
-            hit, sc = hit[keep], sc[keep]
-            if q_bst is not None and hit.size:
-                # per-entry decay/recency boost on a DIS_MAX entry —
-                # same frozen operation order as the plain-entry path
-                # below (boost AFTER the dis_max combine, before top-k);
-                # ADVICE r4: this branch used to drop the boost silently
+                # per-entry decay/recency boost, AFTER the combine and
+                # before top-k (the plain-entry operation order)
                 bv, bcomb = _boost_v(q_bst)
                 sc = sc + bv[hit] if bcomb == "sum" else sc * bv[hit]
             if hit.size:
@@ -2611,20 +2179,6 @@ def search_batch(index, queries: list[dict], k: int = 10,
                  use_wand: "bool | str" = "auto",
                  doc_filter: str | None = None,
                  dv_filter: str | None = None) -> DataFrame:
-    """E9 batch search (see _search_batch_impl for the full plan notes).
-    Plans are memoized per (query set, k, flags) — _plan_cached."""
-    import json as _json
-    _warn_if_stale(index)
-    key = ("b", _json.dumps(queries, sort_keys=True), k,
-           repr(use_wand), doc_filter, dv_filter)
-    return _plan_cached(index, key, lambda: _search_batch_impl(
-        index, queries, k, use_wand, doc_filter, dv_filter))
-
-
-def _search_batch_impl(index, queries: list[dict], k: int = 10,
-                       use_wand: "bool | str" = "auto",
-                       doc_filter: str | None = None,
-                       dv_filter: str | None = None) -> DataFrame:
     """E9: execute a whole query set in ONE Spark job.
 
     ``queries``: [{"id", "query", "mode"}]. One pruned postings scan
@@ -2635,7 +2189,8 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     the shared scatter-add (``use_wand=True`` forces WAND for every
     multi-term OR query — test hook; ``False`` forces exhaustive);
     global per-query top-k via window rank (single shuffle).
-    Returns (qid, doc_id, score).
+    Returns (qid, doc_id, score). Plans are memoized per (query set, k,
+    flags) — _plan_cached.
 
     ``doc_filter``: one SQL predicate applied to EVERY query of the set
     (same frozen semantics as ``search``: global stats, candidate
@@ -2673,21 +2228,117 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     memoized literal-prefix-pushed lexicon scan — same frozen
     semantics as ``search_regexp``.
 
+    ``{"mode": "DIS_MAX"}`` (``"queries"``, ``"tie_breaker"``) and
+    ``{"mode": "MULTI_MATCH"}`` (``"query"``, ``"fields"``,
+    ``"match_type"`` best_fields | most_fields | cross_fields,
+    ``"tie_breaker"``) entries carry the frozen contracts of
+    ``search_dis_max`` / ``search_multi_match`` — those functions ARE
+    one-entry batches. Both lower onto one compound scorer (a dis_max
+    subquery is a slot at boost 1.0 in the text space) and route
+    exhaustive; they compose with exclude, dv_filter, boost and k.
+
     An entry may carry ``"boosts"`` ({term: weight} — the frozen term^w
     rule of ``search(term_boosts=)``); weights multiply that entry's
     qtf only, so boosted and unboosted queries share the scan and the
     decode cache unchanged.
     """
-    import pandas as pd
+    import json as _json
+    _warn_if_stale(index)
+    key = ("b", _json.dumps(queries), k, repr(use_wand), doc_filter,
+           dv_filter)
+    return _plan_cached(index, key, lambda: _search_batch_impl(
+        index, queries, k, use_wand, doc_filter, dv_filter))
+
+
+def _search_batch_impl(index, queries: list[dict], k: int = 10,
+                       use_wand: "bool | str" = "auto",
+                       doc_filter: str | None = None,
+                       dv_filter: str | None = None) -> DataFrame:
+    """The batch plan plus the global per-qid top-k window (each entry
+    cut at its own ``"k"``, defaulting to ``k``)."""
     from pyspark.sql import Window
-    spark = index.spark
+    scored = _batch_scored(index, queries, k, use_wand, doc_filter,
+                           dv_filter)
+    if scored is None:
+        return _empty_topk(index.spark, with_qid=True)
+    ks_by_qid = {q["id"]: int(q["k"]) for q in queries if "k" in q}
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    if ks_by_qid:
+        # per-entry size: qid -> its own k via a tiny literal map
+        pairs = []
+        for qid_, k_ in ks_by_qid.items():
+            pairs += [F.lit(qid_), F.lit(k_)]
+        k_col = F.coalesce(F.element_at(F.create_map(*pairs),
+                                        F.col("qid")), F.lit(k))
+    else:
+        k_col = F.lit(k)
+    return (scored.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k_col).drop("_rn")
+            .orderBy("qid", F.desc("score"), F.asc("doc_id")))
+
+
+def _search_one(index, entry: dict, k: int,
+                doc_filter: str | None = None,
+                dv_filter: str | None = None,
+                fielded: dict | None = None) -> DataFrame:
+    """One ``search_batch`` entry as a single query: the batch plan
+    without the per-qid window, cut by ``orderBy(score desc, doc_id
+    asc).limit(k)`` (TakeOrderedAndProject) and returned as (doc_id,
+    score). ``fielded`` is search_fielded's internal lowering: the
+    entry's per-field {token: weight} maps, by field in fold order."""
+    import json as _json
+    _warn_if_stale(index)
+    key = ("1", _json.dumps(entry), k, doc_filter, dv_filter,
+           _json.dumps(fielded))
+
+    def build():
+        scored = _batch_scored(index, [entry], k, "auto", doc_filter,
+                               dv_filter, fielded)
+        if scored is None:
+            return _empty_topk(index.spark)
+        return (scored.select("doc_id", "score")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+
+    return _plan_cached(index, key, build)
+
+
+def _multi_match_fields(index, qid, flds) -> dict:
+    """A MULTI_MATCH ``"fields"`` value -> {field: boost} in fold order:
+    a dict, a list (boost 1.0 each) or None (text plus every extra
+    field at 1.0); every field must be indexed, every boost > 0."""
+    if flds is None:
+        flds = ["text", *(index.extra_fields or ())]
+    if not isinstance(flds, dict):
+        flds = {str(f_): 1.0 for f_ in flds}
+    flds = {str(f_): float(b_) for f_, b_ in flds.items()}
+    known = {"text", *(index.extra_fields or ())}
+    bad = [f_ for f_ in flds if f_ not in known]
+    if bad:
+        raise ValueError(f"MULTI_MATCH entry {qid!r}: fields {bad} not "
+                         f"indexed (available: {sorted(known)}; build "
+                         f"with IndexConfig.extra_fields)")
+    if not flds or any(b_ <= 0 for b_ in flds.values()):
+        raise ValueError(f"MULTI_MATCH entry {qid!r}: needs at least one "
+                         "field, and field boosts must be > 0")
+    return flds
+
+
+def _batch_scored(index, queries: list[dict], k: int,
+                  use_wand: "bool | str", doc_filter: str | None,
+                  dv_filter: str | None,
+                  fielded: dict | None = None) -> "DataFrame | None":
+    """Lower the entries and plan the shared scan + shard scorer:
+    (qid, doc_id, score) rows, each entry cut at its k per shard — or
+    None when no entry can match. ``fielded``: {qid: {field: {token:
+    weight}}} prebuilt slot maps for MULTI_MATCH entries (search_fielded)."""
+    import pandas as pd
     acfg = index.cfg.analyzer
     # {"mode": "PREFIX"} entries expand driver-side (memoized lexicon
     # range scan, same frozen cap rule as search_prefix) and then ride
     # the shared scan/scorer as ordinary OR queries with qtf=1 per
     # matched term — the expansion never touches the postings job
     per_q, modes = {}, {}
-    musts, minsh, bool_floor, dismaxes, multis = {}, {}, {}, {}, {}
+    musts, minsh, bool_floor, multis, texts = {}, {}, {}, {}, {}
     for q in queries:
         m = q["mode"].upper()
         if m == "PREFIX":
@@ -2711,84 +2362,64 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
                                        int(q.get("max_expansions", 64)))
             per_q[q["id"]] = {r["term"]: 1 for r in rows}
             m = "OR"
-        elif m == "DIS_MAX":
-            # dis_max entry (same frozen combine as search_dis_max):
-            # keys "queries" (list of OR subqueries) + optional
-            # "tie_breaker" in [0, 1]; the entry's scan terms are the
-            # union, the kernel reuses the shared contribution cache
-            subs_q = [query_terms(x, acfg) for x in q["queries"]]
+        elif m in ("DIS_MAX", "MULTI_MATCH"):
+            # compound entries, lowered onto slots (avgdl, boost, key
+            # prefix, {token: qtf}) for the one MULTI_MATCH scorer:
+            # DIS_MAX keys "queries" (one text-space slot per subquery,
+            # boost 1.0, best_fields); MULTI_MATCH keys "query" +
+            # optional "fields" ({field: boost} — dict order = fold
+            # order), "match_type" (one slot per field, with that
+            # field's avgdl and "field:" key prefix). Both take an
+            # optional "tie_breaker" in [0, 1]; routing is exhaustive
+            qid = q["id"]
+            if q.get("boosts") or q.get("min_match") or q.get("demote"):
+                raise ValueError(f"{m} entry {qid!r} composes with "
+                                 "exclude only (plus dv_filter/boost/k)")
             tie_q = float(q.get("tie_breaker", 0.0))
             if not (0.0 <= tie_q <= 1.0):
-                raise ValueError(f"tie_breaker on {q['id']!r} must lie "
+                raise ValueError(f"tie_breaker on {qid!r} must lie "
                                  "in [0, 1]")
-            if q.get("boosts") or q.get("min_match") or q.get("demote"):
-                raise ValueError(f"DIS_MAX entry {q['id']!r} composes "
-                                 "with exclude only")
-            union_q = sorted(set().union(*[set(x) for x in subs_q])
-                             if subs_q else set())
-            per_q[q["id"]] = {t: 1 for t in union_q}
-            dismaxes[q["id"]] = (subs_q, tie_q)
-            m = "OR"
-        elif m == "MULTI_MATCH":
-            # multi-field entry (same frozen semantics as
-            # search_multi_match): keys "query" + optional "fields"
-            # ({field: boost} — dict order = fold order; default text +
-            # every extra field at 1.0), "match_type", "tie_breaker".
-            # The entry's scan terms are the union of the per-field
-            # prefixed keys; routing is exhaustive (the dis_max rule)
-            flds = q.get("fields")
-            if flds is None:
-                flds = {"text": 1.0}
-                for f_ in (index.extra_fields or ()):
-                    flds[f_] = 1.0
-            elif not isinstance(flds, dict):
-                flds = {str(f_): 1.0 for f_ in flds}
+            if m == "DIS_MAX":
+                if not q["queries"]:
+                    raise ValueError(f"DIS_MAX entry {qid!r}: dis_max "
+                                     "needs at least one subquery")
+                mt_q = "best_fields"
+                slots_q = [(float(index.avgdl), 1.0, "",
+                            query_terms(x, acfg)) for x in q["queries"]]
             else:
-                flds = {str(f_): float(b_) for f_, b_ in flds.items()}
-            known_f = {"text", *(index.extra_fields or ())}
-            bad_f = [f_ for f_ in flds if f_ not in known_f]
-            if bad_f:
-                raise ValueError(
-                    f"MULTI_MATCH entry {q['id']!r}: fields {bad_f} "
-                    f"not indexed (available: {sorted(known_f)})")
-            if not flds or any(b_ <= 0 for b_ in flds.values()):
-                raise ValueError(f"MULTI_MATCH entry {q['id']!r}: "
-                                 "field boosts must be > 0")
-            mt_q = str(q.get("match_type", "best_fields"))
-            if mt_q not in ("best_fields", "most_fields"):
-                raise ValueError(f"MULTI_MATCH entry {q['id']!r}: "
-                                 "match_type must be "
-                                 "best_fields|most_fields "
-                                 "(cross_fields is single-query only)")
-            tie_q = float(q.get("tie_breaker", 0.0))
-            if not (0.0 <= tie_q <= 1.0):
-                raise ValueError(f"tie_breaker on {q['id']!r} must lie "
-                                 "in [0, 1]")
-            if mt_q == "most_fields" and tie_q != 0.0:
-                raise ValueError(f"tie_breaker on {q['id']!r} only "
-                                 "applies to best_fields")
-            if q.get("boosts") or q.get("min_match") or q.get("demote"):
-                raise ValueError(f"MULTI_MATCH entry {q['id']!r} "
-                                 "composes with exclude/dv_filter/"
-                                 "boost/k only")
-            qt_mm = query_terms(q["query"], acfg)
-            mm_favg = {"text": float(index.avgdl)}
-            for f_ in (index.extra_fields or ()):
-                mm_favg[f_] = float(
-                    (index.field_avgdl or {}).get(f_, 0.0))
-            slots_q, union_keys = [], set()
-            for f_, b_ in flds.items():
-                avg_f = mm_favg[f_]
-                if avg_f <= 0.0 or not qt_mm:
-                    slots_q.append((1.0, float(b_), {}))
-                    continue
-                mkeys = {(t if f_ == "text" else f"{f_}:{t}"): float(nn)
-                         for t, nn in qt_mm.items()}
-                slots_q.append((avg_f, float(b_), mkeys))
-                union_keys |= set(mkeys)
-            per_q[q["id"]] = {t: 1 for t in sorted(union_keys)}
-            multis[q["id"]] = (slots_q, tie_q, mt_q)
-            m = "OR"
+                mt_q = str(q.get("match_type", "best_fields"))
+                if mt_q not in ("best_fields", "most_fields",
+                                "cross_fields"):
+                    raise ValueError(f"MULTI_MATCH entry {qid!r}: "
+                                     "match_type must be best_fields|"
+                                     "most_fields|cross_fields")
+                if mt_q == "most_fields" and tie_q != 0.0:
+                    raise ValueError(f"tie_breaker on {qid!r} only "
+                                     "applies to best_fields/cross_fields")
+                fmaps = (fielded or {}).get(qid)
+                if fmaps is None:
+                    flds = _multi_match_fields(index, qid,
+                                               q.get("fields"))
+                    qt_mm = query_terms(q["query"], acfg)
+                    fmaps = {f_: qt_mm for f_ in flds}
+                else:  # search_fielded: per-field clause maps
+                    flds = _multi_match_fields(index, qid, list(fmaps))
+                    qt_mm = fmaps.get("text", {})
+                # exclude is a text-space NOT: positive-wins against
+                # the entry's TEXT tokens, never its prefixed keys
+                texts[qid] = qt_mm
+                slots_q = []
+                for f_, b_ in flds.items():
+                    avg_f = float(index.avgdl if f_ == "text" else
+                                  (index.field_avgdl or {}).get(f_, 0.0))
+                    slots_q.append((avg_f, b_,
+                                    "" if f_ == "text" else f_ + ":",
+                                    fmaps[f_] if avg_f > 0.0 else {}))
+            per_q[qid] = {pre + t: 1 for _, _, pre, tm in slots_q
+                          for t in tm}
+            multis[qid] = (slots_q, tie_q, mt_q)
+            # the mode stays DIS_MAX/MULTI_MATCH, not "OR": these never
+            # WAND-route, so a set of them alone reads no blocks/max_tf
         elif m == "BOOL":
             # ES bool entry (same frozen semantics as search_bool): keys
             # "must"/"should" + optional "min_should_match" (default 0
@@ -2850,7 +2481,8 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
                          "was built without positions "
                          "(IndexConfig.index_positions=True required)")
     negs = {q["id"]: sorted(set(tokenize_py(q.get("exclude"), acfg))
-                            - set(per_q.get(q["id"], ())))
+                            - set(texts.get(q["id"],
+                                            per_q.get(q["id"], ()))))
             for q in queries if q.get("exclude")}
     # optional per-entry "dv_filter" (ANSI-SQL predicate over the
     # stored docvalue columns — search(dv_filter=)'s frozen candidate
@@ -2896,14 +2528,13 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
     negs = {qid: ts for qid, ts in negs.items() if qid in per_q and ts}
     demotes = {qid: v for qid, v in demotes.items()
                if qid in per_q and v[0]}
-    dismaxes = {qid: v for qid, v in dismaxes.items() if qid in per_q}
     multis = {qid: v for qid, v in multis.items() if qid in per_q}
     dv_preds = {qid: v for qid, v in dv_preds.items() if qid in per_q}
     msm = {qid: m_ for qid, m_ in msm.items() if qid in per_q}
     phrases = {qid: seq for qid, seq in phrases.items() if qid in per_q}
     slops = {qid: s_ for qid, s_ in slops.items() if qid in phrases}
     if not per_q:
-        return _empty_topk(spark, with_qid=True)
+        return None
     # ONE memoized lexicon lookup for the union of all query + NOT terms;
     # idf rides the task closure — the batch job is the pruned scan alone
     lex = index.lookup_terms(sorted(
@@ -2924,14 +2555,14 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
         minsh = {qid: v for qid, v in minsh.items() if qid in per_q}
         negs = {qid: ts for qid, ts in negs.items() if qid in per_q}
         if not per_q:
-            return _empty_topk(spark, with_qid=True)
+            return None
     scan_terms = sorted(
         t for t in lex
         if t in {u for qt in per_q.values() for u in qt}
         | {u for ts in negs.values() for u in ts}
         | {u for v in demotes.values() for u in v[0]})
     if not scan_terms:
-        return _empty_topk(spark, with_qid=True)
+        return None
     idfs = {t: float(lex[t]["idf"]) for t in scan_terms}
     buckets = sorted({lex[t]["bucket"] for t in scan_terms})
     # keep the "auto" / True distinction (plain `and` would collapse it)
@@ -2989,7 +2620,7 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
                                    width, wand_mode, allowed_loc=loc,
                                    negs=negs, phrases=phrases, msm=msm,
                                    slops=slops, musts=musts, minsh=minsh,
-                                   demotes=demotes, dismaxes=dismaxes,
+                                   demotes=demotes,
                                    multis=multis or None,
                                    dv_preds=dv_preds,
                                    dv_ctx=(dv_dir, dv_gen),
@@ -3015,7 +2646,7 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
                                                else None),
                                    msm=msm, slops=slops,
                                    musts=musts, minsh=minsh,
-                                   demotes=demotes, dismaxes=dismaxes,
+                                   demotes=demotes,
                                    multis=multis or None,
                                    dv_preds=dv_preds,
                                    dv_ctx=(dv_dir, dv_gen),
@@ -3027,19 +2658,7 @@ def _search_batch_impl(index, queries: list[dict], k: int = 10,
         scored = (post.groupBy("shard")
                   .applyInPandas(fn,
                                  "qid string, doc_id long, score double"))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    if ks_by_qid:
-        # per-entry size: qid -> its own k via a tiny literal map
-        pairs = []
-        for qid_, k_ in ks_by_qid.items():
-            pairs += [F.lit(qid_), F.lit(k_)]
-        k_col = F.coalesce(F.element_at(F.create_map(*pairs),
-                                        F.col("qid")), F.lit(k))
-    else:
-        k_col = F.lit(k)
-    return (scored.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k_col).drop("_rn")
-            .orderBy("qid", F.desc("score"), F.asc("doc_id")))
+    return scored
 
 
 def _decode_occurrences(pdf, i: int, start: int):

@@ -37,9 +37,9 @@ loud errors elsewhere):
 Dispatch (all public API, one scoring job each):
 
 * phrase (+ excludes)            -> query.search_phrase(slop=)
-* musts present                  -> query.search_batch (one BOOL entry:
-  must/should/term-weights/exclude — the only public surface that
-  composes all four), qid stripped;
+* musts present                  -> one BOOL entry of the batch plan
+  (must/should/term-weights/exclude — the only entry kind that
+  composes all four), run as a single query (query._search_one);
 * otherwise                      -> query.search(term_boosts=) over the
   merged should set (expansions inlined at weight 1).
 """
@@ -228,8 +228,7 @@ def search_query_string(index, qs: str, k: int = 10,
             entry["exclude"] = excl
         if dv_filter:
             entry["dv_filter"] = dv_filter
-        out = Q.search_batch(index, [entry], k=k, doc_filter=doc_filter)
-        return out.select("doc_id", "score")
+        return Q._search_one(index, entry, k, doc_filter=doc_filter)
     if not should:
         return Q._empty_topk(index.spark)
     weights = {t: w for t, w in should.items() if w != 1.0}

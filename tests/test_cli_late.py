@@ -188,6 +188,27 @@ def test_cli_multi_match(tmp_path_factory):
     assert r.returncode == 2
 
 
+@pytest.mark.parametrize("flags,named", [
+    (["--query-string", "hot0", "--exclude", "w010"], "--exclude"),
+    (["--query-string", "hot0", "--mode", "AND"], "--mode"),
+    (["--query-string", "hot0", "--asc"], "--asc"),
+    (["--query-string", "hot0", "--tie-breaker", "0.3"], "--tie-breaker"),
+    (["--query-string", "hot0", "--match-type", "most_fields"],
+     "--match-type"),
+    (["--query", "hot0", "--mm-field", "text", "--boost-field", "ts",
+      "--boost-now", "2026-01-01T00:00:00"], "--boost-field"),
+    (["--query", "hot0", "--mm-field", "text", "--collapse", "role"],
+     "--collapse"),
+    (["--query", "hot0", "--mm-field", "text", "--sort-by", "ts"],
+     "--sort-by"),
+])
+def test_cli_rejects_ignored_flags(cli_idx, flags, named):
+    """A flag the chosen search form would ignore exits 2 and is named
+    in the message (no silent drop, no elif-chain winner)."""
+    r = _run(["search", "--index-dir", cli_idx] + flags)
+    assert r.returncode == 2 and named in r.stderr, r.stderr[-2000:]
+
+
 def test_cli_query_string(cli_idx):
     """--query-string routes the r5 mini-language end-to-end."""
     rows = _rows(_run(["search", "--index-dir", cli_idx,

@@ -186,7 +186,8 @@ def test_multi_match_streaming_and_purge(spark, corpus_df, corpus_pdf,
 def test_multi_match_batch_matches_single(mf_index):
     """A batch MULTI_MATCH entry must match search_multi_match
     bit-exactly for every routing, mixed with WAND-routable entries;
-    exclude / dv_filter / per-entry boost compose."""
+    exclude / dv_filter / per-entry boost compose, and cross_fields
+    runs in a batch too."""
     qset = [
         {"id": "m1", "mode": "MULTI_MATCH", "query": "hot0 user",
          "fields": {"text": 1.0, "role": 2.0}, "tie_breaker": 0.3},
@@ -196,6 +197,13 @@ def test_multi_match_batch_matches_single(mf_index):
         {"id": "m3", "mode": "MULTI_MATCH", "query": "hot0 user",
          "fields": {"text": 1.0, "role": 2.0},
          "dv_filter": "role = 'user'"},
+        # exclude is positive-wins against the TEXT tokens even when
+        # text is not a listed field: "hot0" excludes nothing here
+        {"id": "m4", "mode": "MULTI_MATCH", "query": "hot0 user",
+         "fields": {"role": 1.0}, "exclude": "hot0"},
+        {"id": "m5", "mode": "MULTI_MATCH", "query": "hot0 user mid1",
+         "fields": {"text": 1.0, "role": 2.0},
+         "match_type": "cross_fields", "tie_breaker": 0.2},
         {"id": "plain", "query": "hot0 hot1", "mode": "OR"},
     ]
     for use_wand in (True, False, "auto"):
@@ -220,6 +228,11 @@ def test_multi_match_batch_matches_single(mf_index):
                         Q.search(mf_index, q["query"], k=10,
                                  mode=q["mode"]).collect()]
             assert by_q.get(q["id"], []) == want, (q["id"], use_wand)
+        unexcluded = [(r.doc_id, r.score) for r in
+                      Q.search_multi_match(mf_index, "hot0 user",
+                                           fields={"role": 1.0},
+                                           k=10).collect()]
+        assert by_q["m4"] == unexcluded, use_wand
     with pytest.raises(ValueError, match="not indexed"):
         Q.search_batch(mf_index, [{"id": "x", "mode": "MULTI_MATCH",
                                    "query": "hot0",

@@ -23,10 +23,10 @@ def qidx(spark, tmp_path_factory):
     return register_queries(spark, QUERIES, d)
 
 
-def _ref_matches(doc_text):
+def _ref_matches(doc_text, queries=QUERIES):
     toks = set(tokenize_py(doc_text, DEFAULT.analyzer))
     out = []
-    for q in QUERIES:
+    for q in queries:
         terms = set(tokenize_py(q["query"], DEFAULT.analyzer))
         req = (q.get("min_match")
                or (len(terms) if q.get("mode", "OR").upper() == "AND"
@@ -137,3 +137,27 @@ def test_register_append_uncompacted_reads_increments(spark, tmp_path):
         want = [r.query_id for r in percolate(full, d).collect()]
         got = [r.query_id for r in percolate(qx3, d).collect()]
         assert got == want, ("post-compact", d)
+
+
+def test_percolate_reads_lone_increment(spark, tmp_path):
+    """When the only valid segment is an increment (a streaming
+    percolator with no final segment, whose second increment never got
+    its _SUCCESS marker), percolation scans exactly that increment."""
+    import os
+
+    from engine.build import load_index
+    from engine.config import IndexConfig
+    from engine.percolate import _query_rows_df
+    from engine.streaming import append_batch, create_streaming_index
+    d = str(tmp_path / "perc_inc")
+    cfg = IndexConfig(doc_values=("qid", "required"))
+    create_streaming_index(spark, d, expected_docs=len(QUERIES), cfg=cfg)
+    for part in (QUERIES[:3], QUERIES[3:]):
+        append_batch(spark, _query_rows_df(spark, part, cfg.analyzer), d,
+                     cfg=cfg)
+    os.remove(os.path.join(d, "segments", "inc_00001", "_SUCCESS"))
+    qx = load_index(spark, d)
+    for doc in ("hot0 w010 something",
+                "MiXeD-Case7! and hot0 hot1 w010 w020 rare3"):
+        got = [r.query_id for r in percolate(qx, doc).collect()]
+        assert got == _ref_matches(doc, QUERIES[:3]), doc

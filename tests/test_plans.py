@@ -233,8 +233,12 @@ def test_late_r4_ops_ride_the_pruned_scan(spark, tmp_path_factory,
         # single-bucket queries render as (bucket = N), multi as IN
         assert re.search(r"PartitionFilters: \[.*bucket", plan), plan
         assert re.search(r"PushedFilters: \[.*\(term", plan), plan
-    assert "TakeOrderedAndProject" in _formatted(
-        Q.search_dis_max(idx, ["hot0 hot1", "rare3"], k=5))
+    plan = _formatted(Q.search_dis_max(idx, ["hot0 hot1", "rare3"], k=5))
+    assert "TakeOrderedAndProject" in plan
+    # dis_max never WAND-routes: its scan reads no WAND/positions columns
+    for schema in re.findall(r"ReadSchema: (\S+)", plan):
+        assert not re.search(r"\bblocks\b|\bmax_tf\b|\bposs\b", schema), \
+            schema
 
 
 def test_percolate_scan_pruned(spark, tmp_path_factory):
@@ -284,9 +288,15 @@ def test_multi_match_and_query_string_plans(spark, corpus_df,
     assert "TakeOrderedAndProject" in plan
     m = re.search(r"ReadSchema: (\S+)", plan)
     assert m and "poss" not in m.group(1)  # column pruning holds
-    # plain dispatch rides search() -> TakeOrderedAndProject; the must
-    # dispatch rides the batch BOOL plan (windowed per-qid limit — the
-    # established batch shape), so assert its row contract instead
+    # multi_match never WAND-routes: no WAND/positions columns are read
+    for schema in re.findall(r"ReadSchema: (\S+)", plan):
+        assert not re.search(r"\bblocks\b|\bmax_tf\b|\bposs\b", schema), \
+            schema
+    # plain dispatch rides search(); the must dispatch runs one BOOL
+    # entry of the batch plan as a single query — both end in
+    # TakeOrderedAndProject
     qsd = search_query_string(idx, "hot0 w010^2 -mid1", k=5)
     assert "TakeOrderedAndProject" in _formatted(qsd)
-    assert len(search_query_string(idx, "+hot0 w010", k=5).collect()) <= 5
+    qsm = search_query_string(idx, "+hot0 w010", k=5)
+    assert "TakeOrderedAndProject" in _formatted(qsm)
+    assert len(qsm.collect()) <= 5
